@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * strict = full outer join on exact (doc, start, end); non-strict = outer
   * join on (doc, label_id, label_set_id) + interval overlap; group-elected
   * ids via confidence-weighted mode; TP/FP/FN flags with the reference's
-  * exact boolean algebra. This is the engine's only shuffle-bearing stage —
-  * joins shuffle on doc-prefixed keys, aggregations are partial-agg friendly.
+  * exact boolean algebra. Each compare plans 4 shuffle exchanges: 2 for
+  * the outer join (both sides hashed on the join key) and 1 per election
+  * (hashed on the group column); `summarize` adds 1.
   */
 object Evaluate {
 
@@ -38,45 +39,39 @@ object Evaluate {
     def outputEncoder = org.apache.spark.sql.Encoders.scalaLong
   }
 
-  /** Elect the "correct" target id per group by confidence-weighted mode of
-    * eligible voters (above threshold ∧ matched), then flag equality
-    * (evaluate.py:46-70). Implemented with a groupBy + deterministic
-    * row_number pick instead of a per-row UDAF pass — shuffle-once, no
-    * per-group pandas-style apply.
+  /** Elect the "correct" target id per group by confidence-weighted mode
+    * (evaluate.py:46-70), then flag equality. One hash exchange on the group
+    * column; everything else is window aggregates over it. Per (group,
+    * target) the vote weight `coalesce(confidence_predicted, 1.0)` is summed
+    * twice, over eligible rows (above threshold ∧ matched) and over all
+    * rows; per group the argmax of each sum is `min(struct(-w, target))`,
+    * which breaks ties toward the smallest target. A group with any
+    * eligible row elects from the eligible sums (null if those rows carry
+    * no target); a group without one falls back to all of its rows
+    * (evaluate.py:51-55). Null targets never vote and never equal the
+    * election (evaluate.py:56-57). Divergence kept deliberately small: the
+    * reference's mode(dropna=False) can elect NaN when null targets are the
+    * modal value — the best non-null target is elected here. A window sum
+    * may add the weights in a different order than a groupBy would, so the
+    * sums match a groupBy's to the last bit only when a (group, target)
+    * pair has at most 2 votes or its weights add exactly.
     */
   private def electAndFlag(df: DataFrame, groupCol: String, targetCol: String): DataFrame = {
-    val eligible = df.filter(col("above_predicted_threshold") && col("is_matched"))
-    val groupCols = // group==target (multiline self-election) needs one col
-      if (groupCol == targetCol) Seq(col(groupCol)) else Seq(col(groupCol), col(targetCol))
-    def rank1(src: DataFrame): DataFrame = {
-      val votes = src
-        .filter(col(targetCol).isNotNull)
-        .groupBy(groupCols: _*)
-        .agg(sum(coalesce(col("confidence_predicted"), lit(1.0))).as("w"))
-      val pick = row_number().over(
-        Window.partitionBy(col(groupCol)).orderBy(col("w").desc, col(targetCol).asc))
-      votes.withColumn("rn", pick).filter(col("rn") === 1)
-        .select(col(groupCol).as("g"), col(targetCol).as(s"elected_$targetCol"))
-    }
-    // groups with NO eligible voter fall back to an election over ALL of
-    // the group's rows (evaluate.py:51-55: mode / weighted_mode of the
-    // whole group when nothing is above threshold & matched). Divergence
-    // kept deliberately small: the reference's mode(dropna=False) can
-    // elect NaN when null targets are the modal value — we elect the best
-    // non-null target there (observable only in all-null-majority groups,
-    // where both readings flag every row false anyway unless ids collide).
-    val hasEligible = eligible.select(col(groupCol).as("ge")).distinct()
-    val all = rank1(df)
-    val fallback = all
-      .join(hasEligible, all("g") <=> hasEligible("ge"), "left_anti")
-    val elected = rank1(eligible).unionByName(fallback)
-    // null target never equals an election result (the reference's
-    // no-target-to-predict branch yields None → False, evaluate.py:56-57)
-    df.join(elected, df(groupCol) <=> elected("g"), "left")
-      .drop("g")
-      .withColumn(s"is_correct_$targetCol",
-        col(targetCol).isNotNull && col(s"elected_$targetCol").isNotNull &&
-          col(targetCol) === col(s"elected_$targetCol"))
+    val t = col(targetCol)
+    val voter = coalesce(col("above_predicted_threshold") && col("is_matched"), lit(false))
+    val w = coalesce(col("confidence_predicted"), lit(1.0))
+    val byTarget = Window.partitionBy(col(groupCol), t)
+    val byGroup = Window.partitionBy(col(groupCol))
+    def argmax(votes: Column, sums: String): Column =
+      min(when(t.isNotNull && votes, struct((-col(sums)).as("w"), t.as("v")))).over(byGroup).getField("v")
+    val elected = s"elected_$targetCol"
+    df.repartition(col(groupCol))
+      .withColumn("__w_elig", sum(when(voter, w)).over(byTarget))
+      .withColumn("__w_all", sum(w).over(byTarget))
+      .withColumn(elected, when(max(voter).over(byGroup), argmax(voter, "__w_elig"))
+        .otherwise(argmax(lit(true), "__w_all")))
+      .drop("__w_elig", "__w_all")
+      .withColumn(s"is_correct_$targetCol", t.isNotNull && col(elected).isNotNull && t === col(elected))
   }
 
   /** Strict compare (evaluate.py:88-103): full outer join on exact offsets.
